@@ -1,0 +1,11 @@
+package org.apache.spark.perfbench
+
+import org.apache.spark.SparkContext
+
+/** The listener bus delivers events asynchronously; counters are read
+  * only after it has drained. `listenerBus` is package-private to Spark,
+  * hence this one-method bridge in Spark's package.
+  */
+object Bus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
